@@ -9,7 +9,16 @@ here is chosen to also be correct at 1000-executor / 100 TB scale:
 - Arrow enabled for every pandas-UDF boundary;
 - UTC session timezone so event-time semantics are deployment-independent
   (the reference leaks wall-clock into ClientTimestamp,
-  /root/reference/pkg/sync/database.go:126 — we never do).
+  /root/reference/pkg/sync/database.go:126 — we never do);
+- driver heap sized to the host: ``min(24g, 0.75 × memory / 1.10)``, where
+  memory is the physical RAM or a smaller cgroup memory limit. Spark's
+  Hardware Provisioning guide allots "at most 75% of the memory for
+  Spark", and ``spark.driver.memoryOverheadFactor`` (default 0.10) adds
+  non-heap memory on top of the heap. In local mode the driver is the only
+  JVM, and Spark's unified memory manager sizes cache and execution memory
+  from the heap, not from the RAM: a heap larger than the host lets cached
+  blocks and uncollected garbage grow until the kernel kills the JVM.
+  ``SPARK_DRIVER_MEM`` (e.g. ``8g``) overrides the computed value.
 """
 
 from __future__ import annotations
@@ -17,6 +26,45 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# cap on the computed default heap; reached on hosts with >= 35.2 GiB
+_MAX_DRIVER_MEM_MB = 24 * 1024
+# Spark Hardware Provisioning: "allocate only at most 75% of the memory
+# for Spark"
+_SPARK_MEMORY_SHARE = 0.75
+# spark.driver.memoryOverheadFactor default: non-heap memory on top of -Xmx
+_MEMORY_OVERHEAD_FACTOR = 0.10
+# cgroup v2, then v1; a limit of "max" (or v1's near-2^63 value) is no limit
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def host_memory_bytes() -> int:
+    """Physical RAM, or the container's cgroup memory limit if smaller."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return total
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for this host: ``min(24g, 0.75 × host
+    memory / (1 + overhead factor))``, so heap plus Spark's assumed
+    non-heap overhead stays within the share Spark's docs allot."""
+    heap_mb = int(
+        host_memory_bytes() * _SPARK_MEMORY_SHARE / (1 + _MEMORY_OVERHEAD_FACTOR)
+    ) // 2**20
+    if heap_mb >= _MAX_DRIVER_MEM_MB:
+        return f"{_MAX_DRIVER_MEM_MB // 1024}g"
+    return f"{heap_mb}m"
 
 
 def get_spark(
@@ -57,7 +105,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # -Xmx of the only JVM in local mode: sized to the host (module
+        # docstring; Spark hardware-provisioning 75% share and 0.10
+        # memoryOverheadFactor); SPARK_DRIVER_MEM overrides it
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "false")
         # state store: RocksDB keeps stateful-op state off-heap and
